@@ -429,7 +429,7 @@ def q_region_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W3/O3: salted skew-safe top-k per group."""
+    """W3/O3: skew-safe top-k per group."""
     o = _read(spark, sf_dir, "orders")
     out = topk_per_group(
         o, ["o_custkey"],

@@ -1,4 +1,4 @@
-"""Auto bloom_mode selection (round-2 verdict item 6): the broadcast→
+"""Automatic seen-set topology (round-2 verdict item 6): the broadcast→
 sharded flip happens from the memory envelope without the caller asking."""
 from __future__ import annotations
 
@@ -6,6 +6,7 @@ from webscraper_spark.operators.dedup import (
     bloom_bytes_estimate,
     choose_bloom_mode,
 )
+from webscraper_spark.plans import round as round_mod
 from webscraper_spark.plans.round import run_crawl
 from webscraper_spark.sources.tables import TableStore
 
@@ -35,18 +36,17 @@ def test_bloom_bytes_estimate_matches_shard_sizing():
     assert abs(shard.bits.nbytes - est) <= 16  # same formula, mod rounding
 
 
-def test_run_round_auto_flips_without_caller(spark, sdfs, tmp_path):
-    # same corpus, two auto runs differing only in the claimed executor
-    # memory: tiny memory → sharded store picked; huge memory →
+def test_run_round_auto_flips_without_caller(spark, sdfs, tmp_path, monkeypatch):
+    # same corpus, two runs differing only in the executor memory the
+    # round reads: tiny memory → sharded store picked; huge memory →
     # broadcast. Identical lineage counts either way (output equivalence).
     def crawl(subdir, mem):
+        monkeypatch.setattr(round_mod, "_executor_memory", lambda _spark: mem)
         store = TableStore(spark, str(tmp_path / subdir))
-        lineages = run_crawl(
+        return run_crawl(
             store, sdfs["pages"], sdfs["seeds"], sdfs["hosts"],
             n_rounds=1, per_host_budget=3,
-            bloom_mode="auto", executor_mem_bytes=mem,
         )
-        return lineages
 
     small = crawl("small", 8)               # absurdly small → sharded
     big = crawl("big", 16 << 30)            # 16 GiB → broadcast

@@ -122,17 +122,20 @@ def test_sharded_bloom_probe_equals_broadcast_and_exact(spark):
     assert sharded == exact == bcast
 
 
-def test_round_sharded_bloom_equals_broadcast(spark, sdfs, tmp_path):
-    """run_round with bloom_mode='sharded' commits byte-identical state to
-    the broadcast-bloom round."""
+def test_round_sharded_bloom_equals_broadcast(spark, sdfs, tmp_path, monkeypatch):
+    """A round whose seen-set goes sharded (tiny executor memory) commits
+    byte-identical state to the broadcast-bloom round (ample memory)."""
+    from webscraper_spark.plans import round as round_mod
     from webscraper_spark.plans.round import run_crawl
     from webscraper_spark.sources.tables import TableStore
 
     outs = {}
-    for mode in ("broadcast", "sharded"):
+    for mode, mem in (("broadcast", 16 << 30), ("sharded", 8)):
+        monkeypatch.setattr(round_mod, "_executor_memory", lambda _spark: mem)
         store = TableStore(spark, str(tmp_path / f"store_{mode}"))
-        run_crawl(store, sdfs["pages"], sdfs["seeds"], sdfs["hosts"],
-                  n_rounds=2, per_host_budget=3, bloom_mode=mode)
+        lineages = run_crawl(store, sdfs["pages"], sdfs["seeds"], sdfs["hosts"],
+                             n_rounds=2, per_host_budget=3)
+        assert [l["bloom_mode_used"] for l in lineages] == [mode, mode]
         outs[mode] = {
             t: sorted(
                 tuple(r) for r in store.read_delta(t, up_to=2)

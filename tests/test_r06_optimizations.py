@@ -212,7 +212,7 @@ def test_ivf_assign_aggregate_matches_window_topk(spark, sdfs):
         for r in topk_per_group(
             scored, ["vec_id"],
             [F.col("__ccos").desc(), F.col("centroid_id").asc()],
-            k=1, rank_col="__r", n_salt=1,
+            k=1, rank_col="__r",
         ).collect()
     }
     assert got == want

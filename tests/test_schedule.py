@@ -1,4 +1,4 @@
-"""Politeness scheduler: ordering, budget, robots, salting invariance."""
+"""Politeness scheduler: ordering, budget, robots, host clocks."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from webscraper_spark.functions.canon import with_canonical
 from webscraper_spark.operators.schedule import advance_host_clocks, schedule_round
-from webscraper_spark.operators.topk import topk_per_group
 
 T0 = datetime(2025, 7, 25, 1, 0, 0)
 
@@ -72,24 +71,6 @@ def test_robots_disallow_filters_private(spark, sdfs):
     assert sched.filter(F.col("url").contains("/private/")).count() > 0
 
 
-def test_salting_does_not_change_ranks(spark, sdfs):
-    f = _frontier(spark, sdfs)
-    a = schedule_round(f, sdfs["hosts"], per_host_budget=4, round_start_ts=T0, n_salt=1)
-    b = schedule_round(f, sdfs["hosts"], per_host_budget=4, round_start_ts=T0, n_salt=8)
-    ka = sorted((r["host"], r["host_seq"], r["url"]) for r in a.collect())
-    kb = sorted((r["host"], r["host_seq"], r["url"]) for r in b.collect())
-    assert ka == kb  # SURVEY §7.4: salt shards computation, never order
-
-
-def test_topk_matches_unsalted(spark):
-    df = spark.range(0, 5000).select(
-        (F.col("id") % 7).alias("g"), F.col("id").alias("v")
-    )
-    a = topk_per_group(df, ["g"], [F.col("v").asc()], k=10, n_salt=1)
-    b = topk_per_group(df, ["g"], [F.col("v").asc()], k=10, n_salt=16)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
 def test_advance_host_clocks(spark, sdfs):
     f = _frontier(spark, sdfs)
     sched = schedule_round(f, sdfs["hosts"], per_host_budget=10, round_start_ts=T0)
@@ -107,33 +88,3 @@ def test_advance_host_clocks(spark, sdfs):
             assert (ts - base).total_seconds() * 1000 == n * d
         else:
             assert ts == before[host]
-
-
-def test_schedule_shuffle_hosts_path_equals_broadcast(spark, sdfs):
-    """The 10^8-host code path (broadcast_hosts=False, co-partitioned
-    shuffle join) must produce exactly the broadcast plan's schedule."""
-    from datetime import datetime
-
-    from webscraper_spark.functions.canon import with_canonical
-    from webscraper_spark.operators.schedule import schedule_round
-    from pyspark.sql import functions as F
-
-    frontier = (
-        with_canonical(sdfs["seeds"]).dropDuplicates(["url_hash"]).select(
-            "url_hash", "url", "host",
-            F.col("priority").cast("int").alias("priority"),
-            F.lit(0).alias("discovered_round"),
-            F.lit(0).alias("retry_count"),
-            F.lit(None).cast("timestamp").alias("next_fetch_ts"),
-        )
-    )
-    ts = datetime(2025, 8, 1)
-    a = schedule_round(frontier, sdfs["hosts"], 3, round_start_ts=ts, broadcast_hosts=True)
-    b = schedule_round(frontier, sdfs["hosts"], 3, round_start_ts=ts, broadcast_hosts=False)
-    cols = ["url_hash", "host", "host_seq", "scheduled_ts"]
-    # (exceptAll over the two plans trips a Catalyst attribute-binding
-    # INTERNAL_ERROR because both sides share the hosts lineage — compare
-    # materialized sets instead)
-    sa = {tuple(r) for r in a.select(cols).collect()}
-    sb = {tuple(r) for r in b.select(cols).collect()}
-    assert sa == sb and len(sa) > 0

@@ -7,7 +7,7 @@ the *same* pre-generated corpus, in *separate processes* (a SparkSession
 is cached per process, so cores must differ per process).
 
 What is measured: **steady-state crawl rounds** over a ~1.2M-URL
-frontier — politeness scheduling (salted ranking window), fetch join,
+frontier — politeness scheduling (per-host ranking window), fetch join,
 Arrow extraction of ~300k pages/round, outlink canonicalization
 (~1.8M hrefs/round), Bloom+exact seen anti-join, and the per-round
 table commits. One-time costs (corpus generation, session startup,
@@ -43,7 +43,7 @@ def _corpus_dfs(spark, n_urls: int = N_URLS, n_hosts: int = N_HOSTS,
                 skew_frac: float | None = None):
     """Deterministic Spark-generated corpus (no driver-side loops): every
     expression is a pure function of the row id. 20% of urls pile onto 20
-    hot hosts (Zipf-head stand-in) to exercise salted scheduling.
+    hot hosts (Zipf-head stand-in) to exercise skew-safe scheduling.
     ``skew_frac``: route that fraction of ALL urls onto host0000 instead
     (the extreme-skew stress for the fetch-join / scheduler A/B)."""
     from pyspark.sql import functions as F
@@ -132,8 +132,7 @@ def gen_corpus_parquet(out_dir: str, n_urls: int = N_URLS,
     spark.stop()
 
 
-def run_one(cores: int, corpus_dir: str, bloom_mode: str = "auto",
-            aqe_skew: bool = True, n_salt: int = 1,
+def run_one(cores: int, corpus_dir: str, aqe_skew: bool = True,
             budget: int = BUDGET) -> dict:
     from webscraper_spark.plans.round import init_crawl, prepare_pages, run_round
     from webscraper_spark.session import get_spark
@@ -165,8 +164,7 @@ def run_one(cores: int, corpus_dir: str, bloom_mode: str = "auto",
 
         t0 = time.time()
         lineages = [
-            run_round(store, pages_latest, r, per_host_budget=budget,
-                      use_bloom=True, bloom_mode=bloom_mode, n_salt=n_salt)
+            run_round(store, pages_latest, r, per_host_budget=budget)
             for r in range(1, ROUNDS + 1)
         ]
         wall = time.time() - t0
@@ -180,7 +178,6 @@ def run_one(cores: int, corpus_dir: str, bloom_mode: str = "auto",
         "rounds": ROUNDS,
         "per_host_budget": budget,
         "aqe_skew": aqe_skew,
-        "n_salt": n_salt,
         # measured from the corpus actually read, not module constants
         # (the skew corpus is 1M urls / 50 hosts, not the defaults)
         "n_urls": seeds.count(),
@@ -251,8 +248,8 @@ def skew_compare(fracs=(0.5, 0.93), cores: int = 8, repeat: int = 2) -> dict:
     """Fetch-join / scheduler stress under extreme host skew: one host
     owns ``frac`` of every URL, the per-host budget is uncapped so the
     skew reaches the fetch join intact. A/B legs per frac: AQE skew-join
-    on (fleet default) vs off, and salted scheduling (n_salt=8) vs
-    unsalted. Records the walls + the knob a 100 TB deployment sets."""
+    on (fleet default) vs off. Records the walls + the knob a 100 TB
+    deployment sets."""
     out = {}
     for frac in fracs:
         corpus_dir = tempfile.mkdtemp(prefix=f"bench_skew_{int(frac*100)}_")
@@ -263,7 +260,6 @@ def skew_compare(fracs=(0.5, 0.93), cores: int = 8, repeat: int = 2) -> dict:
             legs = {
                 "aqe_skew_on": ["--aqe-skew", "on"],
                 "aqe_skew_off": ["--aqe-skew", "off"],
-                "aqe_on_salted": ["--aqe-skew", "on", "--n-salt", "8"],
             }
             res = {}
             for name, extra in legs.items():
@@ -302,8 +298,6 @@ if __name__ == "__main__":
     ap = argparse.ArgumentParser()
     ap.add_argument("--cores", type=int)
     ap.add_argument("--corpus")
-    ap.add_argument("--bloom-mode", default="auto",
-                    help="auto|broadcast|sharded (probe-topology A/B)")
     ap.add_argument("--compare", action="store_true")
     ap.add_argument("--levels", default="2,4,8",
                     help="comma-separated parallelism levels for --compare")
@@ -312,7 +306,6 @@ if __name__ == "__main__":
     ap.add_argument("--skew-compare", action="store_true",
                     help="extreme-host-skew fetch/scheduler A/B")
     ap.add_argument("--aqe-skew", default="on", choices=["on", "off"])
-    ap.add_argument("--n-salt", type=int, default=1)
     ap.add_argument("--budget", type=int, default=BUDGET)
     args = ap.parse_args()
     if args.compare:
@@ -322,7 +315,6 @@ if __name__ == "__main__":
         skew_compare(cores=args.cores or 8, repeat=args.repeat)
     else:
         print(json.dumps(run_one(
-            args.cores, args.corpus, args.bloom_mode,
-            aqe_skew=args.aqe_skew == "on", n_salt=args.n_salt,
+            args.cores, args.corpus, aqe_skew=args.aqe_skew == "on",
             budget=args.budget,
         )))

@@ -81,20 +81,10 @@ def parse_robots_udf(bodies: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=["rules", "crawl_delay_ms"])
 
 
-@F.pandas_udf(T.BooleanType())
-def robots_allows_udf(paths: pd.Series, rules: pd.Series) -> pd.Series:
-    out = [
-        robots_allows(list(r) if r is not None else [], p)
-        for p, r in zip(paths, rules)
-    ]
-    return pd.Series(out)
-
-
 def robots_allows_col(path, rules):
     """JVM-expression twin of :func:`robots_allows` (guide §4.1: prefer
-    built-ins — the admission gate runs once per FRONTIER row, and the
-    pandas UDF shipped every row's path + rule array across the Python
-    boundary). Semantics identical: first rule (in file order) whose
+    built-ins — the admission gate runs once per FRONTIER row, so it
+    stays off the Python boundary). Semantics identical: first rule (in file order) whose
     prefix matches wins ('+' allow / '-' disallow), no match ⇒ allowed,
     empty/NULL path treated as '/'. ``path``/``rules`` are Columns."""
     p = F.when(path.isNull() | (path == ""), F.lit("/")).otherwise(path)

@@ -153,9 +153,7 @@ def bloom_bytes_estimate(n_keys: int, fpp: float = 0.01) -> int:
     return int(-n_keys * math.log(fpp) / (math.log(2) ** 2) / 8) + 1
 
 
-def choose_bloom_mode(
-    n_keys: int, executor_mem_bytes: int, fpp: float = 0.01
-) -> str:
+def choose_bloom_mode(n_keys: int, mem_bytes: int, fpp: float = 0.01) -> str:
     """Pick the probe topology from the memory envelope — the documented
     flip point made automatic: a broadcast probe ships the WHOLE filter
     to every executor, so once the filter exceeds ~¼ of executor memory
@@ -165,7 +163,7 @@ def choose_bloom_mode(
     keys, MBs) broadcast avoids the extra shuffle."""
     return (
         "sharded"
-        if bloom_bytes_estimate(n_keys, fpp) > executor_mem_bytes // 4
+        if bloom_bytes_estimate(n_keys, fpp) > mem_bytes // 4
         else "broadcast"
     )
 
@@ -281,7 +279,15 @@ class CuckooSeenSet:
     discovery round (re-discovery after deletion restores membership).
     Same layered-probe contract as :class:`BloomSeenSet`: no false
     negatives (property of cuckoo deletes only removing known keys),
-    false positives resolved by the exact anti-join."""
+    false positives resolved by the exact anti-join.
+
+    Scale limit: every built shard is ``collect()``-ed to the driver and
+    broadcast whole to every executor, so the whole filter must fit in
+    driver memory and in each executor's broadcast budget. It costs
+    2.3-4.6 bytes per key (2-byte slots, 1.15 load headroom, power-of-two
+    bucket counts), twice that in a shard whose build had to double its
+    capacity: roughly 2×10^8 keys per GB. Past that the seen-set needs a
+    shard-local probe like :class:`BloomShardStore`."""
 
     def __init__(self, shards: dict[int, CuckooFilter], n_shards: int):
         self.shards = shards
@@ -414,7 +420,7 @@ def semi_join_seen(candidates: DataFrame, seen: DataFrame,
 def bloom_filtered_new(
     candidates: DataFrame,
     seen: DataFrame,
-    bloom: "BloomSeenSet | BloomShardStore | CuckooSeenSet | None",
+    bloom: "BloomSeenSet | BloomShardStore | CuckooSeenSet",
     key_col: str = "url_hash",
 ) -> DataFrame:
     """Layered membership: Bloom pre-probe routes definitely-new rows
@@ -422,8 +428,6 @@ def bloom_filtered_new(
     Equivalent to :func:`anti_join_seen` (no false negatives), cheaper at
     steady state. Accepts the broadcast probe (BloomSeenSet/CuckooSeenSet)
     or the shard-local distributed probe (BloomShardStore)."""
-    if bloom is None:
-        return anti_join_seen(candidates, seen, key_col)
     if isinstance(bloom, BloomShardStore):
         # eager localCheckpoint: the cogrouped per-shard bitmap probe
         # (shuffle + applyInPandas) feeds BOTH the anti and the semi
@@ -512,14 +516,20 @@ class CuckooFilter:
         """Bulk insert with hashes computed vectorized (the hash is the
         per-insert hot cost; eviction placement stays sequential by
         nature). Returns a bool per key — callers MUST check: a False
-        means the table is full and the key was dropped (a false negative
-        if ignored)."""
+        means the key was not inserted (a false negative if ignored).
+
+        Fails fast: the first key that cannot be placed means the table
+        is full, so insertion stops there and that key and every later
+        one report False. Once full, each further ``_place`` would run
+        all ``MAX_KICKS`` evictions and roll them back only to fail."""
         if len(keys) == 0:
             return np.zeros(0, dtype=bool)
         fps, i1s, i2s = self._fp_index_many(np.asarray(keys, dtype=np.int64))
-        ok = np.ones(len(fps), dtype=bool)
+        ok = np.zeros(len(fps), dtype=bool)
         for j in range(len(fps)):
-            ok[j] = self._place(int(fps[j]), int(i1s[j]), int(i2s[j]))
+            if not self._place(int(fps[j]), int(i1s[j]), int(i2s[j])):
+                break
+            ok[j] = True
         return ok
 
     def contains_many(self, keys: np.ndarray) -> np.ndarray:

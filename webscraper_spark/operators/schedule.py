@@ -20,8 +20,7 @@ fetches on one host are always ≥ crawl_delay apart — across rounds too
 
 Skew: the budget filter compiles to Catalyst's WindowGroupLimit (map-side
 per-host top-k before the shuffle), so a Zipf-head host cannot serialize
-a round into one task; :mod:`.topk` keeps an explicit salted two-phase
-variant for engines without that rule (byte-identical per-host order).
+a round into one task (see :mod:`.topk`).
 """
 
 from __future__ import annotations
@@ -56,8 +55,6 @@ def schedule_round(
     hosts: DataFrame,
     per_host_budget: int,
     round_start_ts=None,
-    n_salt: int = 1,
-    broadcast_hosts: bool = True,
 ) -> DataFrame:
     """Admit + order + timestamp this round's fetches.
 
@@ -65,16 +62,14 @@ def schedule_round(
     sequence), ``scheduled_ts``, ``delay_ms``. Unknown hosts get default
     politeness (allowed, DEFAULT_DELAY_MS, clock = round start).
 
-    Scale notes: the frontier→hosts join is a shuffle-on-host equi-join
-    (hosts is ~|distinct hosts| rows — broadcastable when it fits, and
-    Catalyst/AQE picks that up from stats); ranking is the salted top-k;
+    Scale notes: the hosts side is always broadcast, so it must fit in
+    driver and executor memory. A host row (name, clock, delay, parsed
+    robots rules) is ~100-300 bytes, so 10^6 hosts take a few hundred MB;
+    Spark refuses a broadcast over 8 GB. Ranking is the per-host top-k;
     everything downstream sees ≤ budget rows per host.
     """
     hd = hosts_with_rules(hosts)
-    # hosts is |distinct hosts| rows — broadcast while it fits (the common
-    # case); at 10^8-host scale flip to a shuffle join co-partitioned on
-    # host with the frontier's hash partitioning.
-    joined = frontier.join(F.broadcast(hd) if broadcast_hosts else hd, on="host", how="left")
+    joined = frontier.join(F.broadcast(hd), on="host", how="left")
 
     # backoff gate: rows whose next_fetch_ts is in the logical future wait
     if round_start_ts is not None:
@@ -85,8 +80,7 @@ def schedule_round(
 
     # robots admission (C5): path prefix match against the host's rules —
     # a JVM expression (robots_allows_col), so the per-frontier-row gate
-    # never crosses the Python boundary (guide §4.1; the old pandas UDF
-    # shipped every row's path and rule array to Python and back)
+    # never crosses the Python boundary (guide §4.1)
     path = F.coalesce(F.parse_url(F.col("url"), F.lit("PATH")), F.lit("/"))
     joined = joined.withColumn(
         "__allowed",
@@ -101,7 +95,6 @@ def schedule_round(
         order_cols=[F.col("priority").asc(), F.col("url_hash").asc()],
         k=per_host_budget,
         rank_col="host_seq",
-        n_salt=n_salt,
     )
 
     delay = F.coalesce(F.col("delay_ms"), F.lit(DEFAULT_DELAY_MS))

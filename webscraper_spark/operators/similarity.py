@@ -750,7 +750,7 @@ def ivf_topk(
         ),
         ["query_id"],
         [F.col("__ccos").desc(), F.col("centroid_id").asc()],
-        k=nprobe, rank_col="__prank", n_salt=1,
+        k=nprobe, rank_col="__prank",
     ).select("query_id", "__qvec", "__qn", "centroid_id")
     cands = probes.join(assigned, on="centroid_id")
     scored = cands.filter(F.col(id_col) != F.col("query_id")).select(

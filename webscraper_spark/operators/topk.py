@@ -9,13 +9,10 @@ and the post-shuffle sort per host is tiny — verified in this repo's
 plans (``WindowGroupLimit ... Partial`` under the Exchange) and measured
 flat across 50%→93% hot-host skew at 15M rows.
 
-So the DEFAULT here is the plain declarative rank-filter: it is the
-skew-mitigated plan *and* has one fewer shuffle than manual salting.
-``n_salt > 1`` keeps the explicit two-phase variant — rank within
-(group, salt) sub-groups, keep local top-k, re-rank the ≤ k·n_salt
-survivors — for engines/versions without WindowGroupLimit; it produces
-byte-identical ranks (property: salting shards only the pruning
-computation, never the final per-group order).
+So this is the plain declarative rank-filter: it is the skew-mitigated
+plan *and* has one fewer shuffle than manual salting. The map-side limit
+only helps when ``k`` is small next to a group's size; an unbudgeted
+window over a hot group still ranks it in one task.
 """
 
 from __future__ import annotations
@@ -31,22 +28,12 @@ def topk_per_group(
     order_cols: list[Column],
     k: int,
     rank_col: str = "rank",
-    n_salt: int = 1,
 ) -> DataFrame:
     """Deterministic top-k per group (skew-safe via WindowGroupLimit; see
     module docstring). ``order_cols`` must be a total order within each
     group (include a unique tie-breaker like ``url_hash``) or ranks are
     nondeterministic.
     """
-    if n_salt > 1:
-        salt = F.pmod(F.xxhash64(*[F.col(c) for c in group_cols], F.monotonically_increasing_id()), F.lit(n_salt))
-        w_local = Window.partitionBy(*group_cols, "__salt").orderBy(*order_cols)
-        df = (
-            df.withColumn("__salt", salt)
-            .withColumn("__lrank", F.row_number().over(w_local))
-            .filter(F.col("__lrank") <= k)
-            .drop("__salt", "__lrank")
-        )
     w = Window.partitionBy(*group_cols).orderBy(*order_cols)
     return (
         df.withColumn(rank_col, F.row_number().over(w))

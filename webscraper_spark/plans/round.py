@@ -15,7 +15,7 @@ round K is invisible and idempotently re-runnable (C8 resume semantics;
 the reference's analog is JSON-checkpoint short-circuiting,
 ``LinkedIn-Updated-Script.py:188-194``).
 
-Scale shape: the only wide operations are (a) the scheduler's salted
+Scale shape: the only wide operations are (a) the scheduler's per-host
 ranking window, (b) the fetch equi-join on (url_hash, url) — at cluster
 scale both sides bucketed by url_hash so this is co-partitioned, (c) the
 seen anti-join, which the Bloom pre-probe shrinks to the maybe-seen
@@ -38,19 +38,20 @@ from ..operators.dedup import (
     BloomSeenSet,
     BloomShardStore,
     CuckooSeenSet,
-    anti_join_seen,
     bloom_filtered_new,
     choose_bloom_mode,
     dedup_latest,
 )
 from ..operators.hoststats import throttle_admission
 from ..operators.schedule import advance_host_clocks, schedule_round
-from ..schemas import FETCHED, FRONTIER, SEEN
+from ..schemas import FRONTIER
 from ..sources.tables import TableStore
 
 BASE_ROUND_EPOCH = datetime(2025, 7, 25, 0, 0, 0)
 ROUND_INTERVAL = timedelta(hours=1)
 RETRY_BACKOFF = timedelta(minutes=30)
+MAX_RETRIES = 2  # misses beyond this many retries fall out of the frontier
+SEEN_SHARDS = 32  # seen-set filter shards (Bloom and cuckoo)
 N_METRIC_SHARDS = 32
 
 
@@ -65,6 +66,24 @@ def _parse_mem(s: str) -> int:
     if s and s[-1] in units:
         return int(float(s[:-1]) * units[s[-1]])
     return int(s)
+
+
+def _executor_memory(spark) -> int:
+    """Executor memory the seen-set's broadcast→sharded flip is sized
+    against (``spark.executor.memory``)."""
+    return _parse_mem(spark.conf.get("spark.executor.memory", "1g"))
+
+
+def _frontier_rows(df: DataFrame, priority, discovered_round: int) -> DataFrame:
+    """FRONTIER rows for urls entering the frontier fresh: no retries yet,
+    fetchable at once. ``df`` carries url_hash/url/host."""
+    return df.select(
+        "url_hash", "url", "host",
+        priority.cast("int").alias("priority"),
+        F.lit(discovered_round).alias("discovered_round"),
+        F.lit(0).alias("retry_count"),
+        F.lit(None).cast("timestamp").alias("next_fetch_ts"),
+    )
 
 
 def round_clock(round_no: int) -> datetime:
@@ -93,20 +112,9 @@ def init_crawl(
 ) -> None:
     """Round 0: canonicalized seeds become the frontier AND the initial
     seen membership (a seed is by definition discovered)."""
-    f = (
-        with_canonical(seeds)
-        .dropDuplicates(["url_hash"])
-        .select(
-            "url_hash",
-            "url",
-            "host",
-            F.col("priority").cast("int").alias("priority"),
-            F.lit(0).alias("discovered_round"),
-            F.lit(0).alias("retry_count"),
-            F.lit(None).cast("timestamp").alias("next_fetch_ts"),
-        )
+    frontier = _frontier_rows(
+        with_canonical(seeds).dropDuplicates(["url_hash"]), F.col("priority"), 0
     )
-    frontier = f
     store.write("frontier", frontier, 0)
     store.write(
         "seen",
@@ -139,13 +147,7 @@ def run_round(
     pages_latest: DataFrame,
     round_no: int,
     per_host_budget: int = 5,
-    max_retries: int = 2,
-    use_bloom: bool = True,
-    n_salt: int = 1,
-    bloom_shards: int = 32,
     recrawl: DataFrame | None = None,
-    bloom_mode: str = "auto",
-    executor_mem_bytes: int | None = None,
     host_reputation: DataFrame | None = None,
     extra_lineage: dict | None = None,
 ) -> dict:
@@ -157,12 +159,9 @@ def run_round(
     seen-set (recorded in the ``seen_deletes`` delta), re-enqueued at top
     priority, and re-added to ``seen`` as discovered this round. With
     deletions present the fast membership path switches from Bloom to the
-    deletion-capable cuckoo filters.
-
-    ``bloom_mode``: "auto" (default) sizes the filter from the seen count
-    and flips broadcast→sharded past ¼ of executor memory
-    (``executor_mem_bytes`` overrides the ``spark.executor.memory`` conf);
-    "broadcast"/"sharded" force a topology (both output-equivalent,
+    deletion-capable cuckoo filters. Without them the Bloom filter is
+    sized from the seen count and goes sharded once a broadcast copy would
+    take more than ¼ of ``spark.executor.memory`` (output-equivalent,
     tested).
 
     ``host_reputation``: optional :func:`..operators.hoststats.host_stats`
@@ -194,18 +193,11 @@ def run_round(
 
     recrawl_rows = None
     if recrawl is not None:
-        recrawl_rows = (
-            with_canonical(recrawl.select("url"))
-            .dropDuplicates(["url_hash"])
-            .select(
-                "url_hash", "url", "host",
-                F.lit(0).alias("priority"),  # recrawls jump the queue
-                F.lit(round_no).alias("discovered_round"),
-                F.lit(0).alias("retry_count"),
-                F.lit(None).cast("timestamp").alias("next_fetch_ts"),
-            )
-            .persist()
-        )
+        recrawl_rows = _frontier_rows(
+            with_canonical(recrawl.select("url")).dropDuplicates(["url_hash"]),
+            F.lit(0),  # recrawls jump the queue
+            round_no,
+        ).persist()
         frontier = frontier.join(
             recrawl_rows.select("url_hash"), on="url_hash", how="left_anti"
         ).unionByName(recrawl_rows)
@@ -214,7 +206,7 @@ def run_round(
 
     # 1. politeness scheduling (robots + ranking window + budget)
     scheduled = schedule_round(
-        frontier, hosts, per_host_budget, round_start_ts=start_ts, n_salt=n_salt
+        frontier, hosts, per_host_budget, round_start_ts=start_ts
     ).persist()
 
     # 2. "fetch" = equi-join against the pages table on url_hash ALONE so
@@ -277,37 +269,28 @@ def run_round(
     seen_admit = seen_eff.select("url_hash")
     if recrawl_rows is not None:
         seen_admit = seen_admit.unionByName(recrawl_rows.select("url_hash"))
-    fast = None
-    if use_bloom and bloom_mode == "auto":
-        # automatic flip point (was a caller decision): size the filter
-        # from the seen count and go sharded once a broadcast copy would
-        # eat >¼ of executor memory. One cheap single-column count; the
-        # 10^10-key design point always lands sharded here.
-        mem = executor_mem_bytes
-        if mem is None:
-            mem = _parse_mem(
-                pages_latest.sparkSession.conf.get("spark.executor.memory", "1g")
-            )
-        bloom_mode = choose_bloom_mode(seen_admit.count(), mem)
-    if use_bloom:
-        if deletes is not None or recrawl_rows is not None:
-            # deletions in play → deletion-capable cuckoo filters; this
-            # round's recrawl keys fold into the distributed cogroup
-            # build with an always-wins discovery round (they must still
-            # read as "seen" for admission — re-added below). No driver
-            # collect: a bulk recrawl of millions of URLs builds at the
-            # same cost as the seen-set itself, and the build's checked
-            # inserts rebuild full shards at doubled capacity instead of
-            # silently dropping keys.
-            fast = CuckooSeenSet.build(
-                seen, deletes, n_shards=bloom_shards, extra=recrawl_rows
-            )
-        elif bloom_mode == "sharded":
-            # 10^10-key path: shards never collected, probe is a
-            # shard-cogrouped join (per-shard memory, one narrow shuffle)
-            fast = BloomShardStore.build(seen_admit, n_shards=bloom_shards)
-        else:
-            fast = BloomSeenSet.build(seen_admit, n_shards=bloom_shards)
+    if deletes is not None or recrawl_rows is not None:
+        # deletions in play → deletion-capable cuckoo filters; this
+        # round's recrawl keys fold into the distributed cogroup build
+        # with an always-wins discovery round (they must still read as
+        # "seen" for admission — re-added below), and the build's checked
+        # inserts rebuild full shards at doubled capacity instead of
+        # silently dropping keys.
+        bloom_mode = "cuckoo"
+        fast = CuckooSeenSet.build(
+            seen, deletes, n_shards=SEEN_SHARDS, extra=recrawl_rows
+        )
+    else:
+        # size the filter from the seen count and go sharded once a
+        # broadcast copy would eat >¼ of executor memory. One cheap
+        # single-column count; the 10^10-key design point always lands
+        # sharded: shards never collected, the probe is a shard-cogrouped
+        # join (per-shard memory, one narrow shuffle).
+        bloom_mode = choose_bloom_mode(
+            seen_admit.count(), _executor_memory(pages_latest.sparkSession)
+        )
+        seen_set = BloomShardStore if bloom_mode == "sharded" else BloomSeenSet
+        fast = seen_set.build(seen_admit, n_shards=SEEN_SHARDS)
     admitted = bloom_filtered_new(candidates, seen_admit, fast)
     if host_reputation is not None:
         # host-reputation gate on admission: candidates from duplicate-
@@ -317,20 +300,11 @@ def run_round(
             admitted.withColumnRenamed("__pprio", "priority"),
             host_reputation,
         ).withColumnRenamed("priority", "__pprio")
-    new_urls = admitted.select(
-        "url_hash",
-        "url",
-        "host",
-        (F.col("__pprio") + 1).cast("int").alias("priority"),
-        F.lit(round_no).alias("discovered_round"),
-        F.lit(0).alias("retry_count"),
-        F.lit(None).cast("timestamp").alias("next_fetch_ts"),
-    ).persist()
+    new_urls = _frontier_rows(admitted, F.col("__pprio") + 1, round_no).persist()
 
     # 5. next frontier: remove completed fetches, back off misses, admit new
-    retried = (  # misses beyond max_retries simply fall out of the frontier
-
-        misses.filter(F.col("retry_count") < max_retries)
+    retried = (  # misses beyond MAX_RETRIES simply fall out of the frontier
+        misses.filter(F.col("retry_count") < MAX_RETRIES)
         .select(
             "url_hash", "url", "host", "priority", "discovered_round",
             (F.col("retry_count") + 1).alias("retry_count"),
@@ -369,39 +343,30 @@ def run_round(
         )
     )
 
-    # 7. per-shard lineage metrics (C9): shard = pmod(xxhash64(host), N)
-    shard = F.pmod(F.xxhash64("host"), F.lit(N_METRIC_SHARDS)).cast("int")
-    metrics = (
-        fetched_rows.withColumn("shard", shard)
-        .groupBy("shard")
-        .agg(
-            F.count("*").alias("scheduled"),
-            F.sum(F.when(F.col("fetch_status") == "ok", 1).otherwise(0)).alias("fetched"),
-            F.sum(F.when(F.col("fetch_status") == "miss", 1).otherwise(0)).alias("missed"),
+    # 7. per-shard lineage metrics (C9): shard = pmod(xxhash64(host), N),
+    # one groupBy over each row's narrow contribution to the counters
+    def contrib(rows, fetched=0, missed=0, new=0, bytes_html=F.lit(0)):
+        return rows.select(
+            F.pmod(F.xxhash64("host"), F.lit(N_METRIC_SHARDS)).cast("int").alias("shard"),
+            F.lit(fetched + missed).alias("scheduled"),
+            F.lit(fetched).alias("fetched"),
+            F.lit(missed).alias("missed"),
+            F.lit(new).alias("new_urls"),
+            bytes_html.cast("long").alias("bytes_html"),
         )
-        .withColumn("round", F.lit(round_no))
-    )
-    new_per_shard = (
-        new_urls.withColumn("shard", F.pmod(F.xxhash64("host"), F.lit(N_METRIC_SHARDS)).cast("int"))
-        .groupBy("shard")
-        .agg(F.count("*").alias("new_urls"))
-    )
-    html_per_shard = (
-        extracted.withColumn("shard", shard)
-        .groupBy("shard")
-        .agg(F.sum("__html_len").alias("bytes_html"))
-    )
+
+    counters = ("scheduled", "fetched", "missed", "new_urls", "bytes_html")
     metrics = (
-        metrics.join(new_per_shard, on="shard", how="full")
-        .join(html_per_shard, on="shard", how="full")
+        contrib(extracted, fetched=1, bytes_html=F.col("__html_len"))
+        .unionByName(contrib(misses, missed=1))
+        .unionByName(contrib(new_urls, new=1))
+        .groupBy("shard")
+        .agg(*[F.sum(c).alias(c) for c in counters])
+        # coalesce only restores METRICS' NOT NULL: Catalyst types pmod
+        # and sum as nullable, though neither is ever null here
         .select(
-            F.coalesce("round", F.lit(round_no)).alias("round"),
-            F.coalesce("shard", F.lit(-1)).alias("shard"),
-            F.coalesce("scheduled", F.lit(0)).alias("scheduled"),
-            F.coalesce("fetched", F.lit(0)).alias("fetched"),
-            F.coalesce("missed", F.lit(0)).alias("missed"),
-            F.coalesce("new_urls", F.lit(0)).alias("new_urls"),
-            F.coalesce("bytes_html", F.lit(0)).alias("bytes_html"),
+            F.lit(round_no).alias("round"),
+            *[F.coalesce(c, F.lit(0)).alias(c) for c in ("shard",) + counters],
         )
     )
 
@@ -446,11 +411,7 @@ def run_round(
         "missed": int(agg["m"] or 0),
         "new_urls": int(agg["n"] or 0),
         "elapsed_sec": elapsed_sec,
-        "bloom_mode_used": (
-            "cuckoo" if isinstance(fast, CuckooSeenSet)
-            else "sharded" if isinstance(fast, BloomShardStore)
-            else "broadcast" if fast is not None else "none"
-        ),
+        "bloom_mode_used": bloom_mode,
     }
     if recrawl_rows is not None:
         lineage["recrawled"] = recrawl_rows.count()
